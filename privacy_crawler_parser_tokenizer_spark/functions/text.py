@@ -182,7 +182,7 @@ _SPANS_TAGGED = """
                                p -> p.kind = s.kind)) - 1,
       'tag', concat(s.kind, cast(
          size(filter(slice({spans}, 1, i + 1), p -> p.kind = s.kind)) - 1
-         AS string))))
+         AS string)){carry}))
 """
 
 _SPANS_CTX = """
@@ -192,17 +192,21 @@ _SPANS_CTX = """
       'prec_by', CASE WHEN i = 0 THEN element_at(_tagged, -1).tag
                       ELSE _tagged[i - 1].tag END,
       'proc_by', CASE WHEN i = size(_tagged) - 1 THEN 'None'
-                      ELSE _tagged[i + 1].tag END))
+                      ELSE _tagged[i + 1].tag END{carry}))
 """
 
 
-def spans_tagged_col(spans_col_name: str = "spans") -> Column:
-    return F.expr(_SPANS_TAGGED.format(spans=spans_col_name))
+def spans_tagged_col(spans_col_name: str = "spans", carry=()) -> Column:
+    """``carry``: names of arrays parallel to the span array (one element
+    per span) whose i-th element rides along in the i-th struct."""
+    return F.expr(_SPANS_TAGGED.format(
+        spans=spans_col_name, carry="".join(f", '{c}', {c}[i]" for c in carry)))
 
 
-def spans_context_col() -> Column:
-    """Apply to a ``_tagged`` column produced by :func:`spans_tagged_col`."""
-    return F.expr(_SPANS_CTX)
+def spans_context_col(carry=()) -> Column:
+    """Apply to a ``_tagged`` column produced by :func:`spans_tagged_col`
+    with the same ``carry``."""
+    return F.expr(_SPANS_CTX.format(carry="".join(f", '{c}', s.{c}" for c in carry)))
 
 
 # ---------------------------------------------------------------------------

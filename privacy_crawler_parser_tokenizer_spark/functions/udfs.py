@@ -1,10 +1,18 @@
-"""Vectorized pandas/Arrow UDF families.
+"""Vectorized pandas/Arrow UDF families and batch kernels.
 
-Exactly the five UDF families SURVEY.md §2.5 calls for — everything
-else in the engine is native Spark SQL.  Each UDF wraps a ``core``
-kernel so executor behavior is bit-identical to the sequential oracle.
-All are Arrow-batched (one Python invocation per batch, loop inside) —
-no per-row Python at the Spark boundary.
+The five UDF families SURVEY.md §2.5 calls for (page processing, link
+extraction, HTML -> spans, sentence tokenization, verification), plus
+the batch kernels the two hot stages run as ONE map node each: the
+fused fetch-stage page kernel (``make_process_batch_fn``) and the fused
+parse+split stage (``make_parse_split_fn``).  Everything else in the
+engine is native Spark SQL.  Each UDF and kernel wraps a ``core``
+kernel, and the UDF/kernel twins share one loop body, so executor
+behavior is bit-identical to the sequential oracle.  All are
+Arrow-batched (one Python invocation per batch, loop inside) — no
+per-row Python at the Spark boundary.  The hot stages use map nodes,
+not expression UDFs: Catalyst can clone an expression UDF into the
+filters it infers and pushes below it (an explode's ``size(x) > 0``),
+while a plan node runs once.
 
 The TF-IDF and English-gate UDFs are *factories* taking broadcast
 variables (ground-truth token counts / dictionary set are broadcast
@@ -18,7 +26,9 @@ from __future__ import annotations
 import sys
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -88,6 +98,19 @@ def extract_doc_udf(html: pd.Series, auto_text: pd.Series) -> pd.DataFrame:
     ``auto_text`` may be null -> derived via strip_text."""
     _bump_recursion_limit()
     spans_out, text_out, residual_out = [], [], []
+    for spans, stripped, residual in _extract_rows(html, auto_text):
+        spans_out.append([s.as_tuple() for s in spans])
+        text_out.append(stripped)
+        residual_out.append(residual)
+    return pd.DataFrame(
+        {"spans": spans_out, "stripped_text": text_out, "residual_count": residual_out}
+    )
+
+
+def _extract_rows(html, auto_text):
+    """The ONE document-extraction loop body shared by ``extract_doc_udf``
+    and the fused parse+split stage: (spans, stripped_text,
+    residual_count) per document."""
     for h, t in zip(html, auto_text):
         h = h or ""
         if isinstance(t, str) and t != "":
@@ -96,12 +119,7 @@ def extract_doc_udf(html: pd.Series, auto_text: pd.Series) -> pd.DataFrame:
         else:
             spans, stripped = extract_doc(h)  # single parse
         residual = len(compare_parsed_text(spans, stripped)) if stripped else 0
-        spans_out.append([s.as_tuple() for s in spans])
-        text_out.append(stripped)
-        residual_out.append(residual)
-    return pd.DataFrame(
-        {"spans": spans_out, "stripped_text": text_out, "residual_count": residual_out}
-    )
+        yield spans, stripped, residual
 
 
 @F.pandas_udf(StringType())
@@ -117,7 +135,11 @@ def strip_text_udf(html: pd.Series) -> pd.Series:
 @F.pandas_udf(ArrayType(StringType()))
 def sentences_udf(text: pd.Series) -> pd.Series:
     """Canonical sentence split (reference: parser-tokenizer.py:219)."""
-    return text.map(lambda t: sent_tokenize(t) if t else [])
+    return text.map(_sentences)
+
+
+def _sentences(text):
+    return sent_tokenize(text) if text else []
 
 
 # -- family 2: link extraction ---------------------------------------------
@@ -253,6 +275,70 @@ def make_process_batch_fn(bc_gt_counts, bc_dictionary, max_depth: int):
         return pdf
 
     return process
+
+
+# -- the fused parse+split stage -------------------------------------------
+
+# sentences of one span, and of every span of a document
+SPAN_SENTS_FIELD = StructField("sents", ArrayType(StringType()))
+DOC_SENTS_FIELD = StructField("sents", ArrayType(SPAN_SENTS_FIELD.dataType))
+SPLIT_KINDS = ("p", "h")  # span kinds the tokenizer splits into sentences
+
+
+def parse_split_fields(split: bool) -> list[StructField]:
+    """The columns the fused parse+split stage appends to its input."""
+    return list(EXTRACT_SCHEMA.fields) + ([DOC_SENTS_FIELD] if split else [])
+
+
+def make_parse_split_fn(auto_text_col: str | None, split: bool):
+    """mapInArrow body of the fused parse+split stage: each document's
+    HTML crosses into Python ONCE.  Passes every input column through
+    and appends EXTRACT_SCHEMA's columns (``_extract_rows``, the
+    ``extract_doc_udf`` loop body) plus, when ``split``, ``sents``: per
+    span, the ``sent_tokenize`` split of a p/h span's text (the
+    ``sentences_udf`` kernel) and null for other kinds.  A plan node,
+    unlike an expression UDF, is never cloned into the filters Catalyst
+    infers for a downstream explode."""
+    fields = parse_split_fields(split)
+    names = [f.name for f in fields]
+    types = [to_arrow_type(f.dataType) for f in fields]
+
+    def parse_split(batches):
+        _bump_recursion_limit()
+        for batch in batches:
+            html = batch.column("html").to_pylist()
+            auto_text = (
+                batch.column(auto_text_col).to_pylist()
+                if auto_text_col else [None] * len(html)
+            )
+            out = [[] for _ in fields]
+            for spans, stripped, residual in _extract_rows(html, auto_text):
+                out[0].append([s.as_tuple() for s in spans])
+                out[1].append(stripped)
+                out[2].append(residual)
+                if split:
+                    out[3].append([
+                        _sentences(s.text) if s.kind in SPLIT_KINDS else None
+                        for s in spans
+                    ])
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + [pa.array(c, t) for c, t in zip(out, types)],
+                names=batch.schema.names + names,
+            )
+
+    return parse_split
+
+
+def split_spans_batch(batches):
+    """mapInArrow body for span rows that did not come through the fused
+    stage: appends ``sents``, the ``sentences_udf`` kernel over ``text``."""
+    sents_type = to_arrow_type(SPAN_SENTS_FIELD.dataType)
+    for batch in batches:
+        sents = [_sentences(t) for t in batch.column("text").to_pylist()]
+        yield pa.RecordBatch.from_arrays(
+            batch.columns + [pa.array(sents, sents_type)],
+            names=batch.schema.names + ["sents"],
+        )
 
 
 def broadcast_ground_truth(spark, ground_truth_text: str):

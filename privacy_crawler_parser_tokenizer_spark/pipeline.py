@@ -4,24 +4,33 @@ One linear DataFrame dataflow replacing the reference's per-file
 process-pool (src/parser-tokenizer.py:339-397):
 
     documents(doc_id, html[, auto_text])
-      -> extract_doc UDF (spans + stripped text + parse self-check)
-      -> posexplode(spans)                      [spans table]
-      -> window (tag_index, lag/lead neighbor context)
-      -> filter kind in (p,h) -> sentence UDF -> posexplode
+      -> fused parse+split node (mapInArrow, ONE Python crossing per
+         document: spans + stripped text + parse self-check +
+         per-span sentences)                    [extracted table]
+      -> array-local context (tag_index, prec_by/proc_by)
+      -> explode_outer                          [spans table]
+      -> filter parse_ok (same row, no join), kind in (p,h)
+      -> posexplode(sentences)
       -> native rule expressions                [sentences table]
       -> explode(rule_hits) -> groupBy          [rule_counts tables]
 
-Scale notes: the only Python is the two Arrow-batched UDFs (HTML parse,
-sentence split); every window partitions by doc_id (narrow, no skew —
-one doc is one partition key), and the aggregations are partial-agg
-hash groupBys.  The parse-success gate (residual > 5 -> drop,
-reference :306) is a plain filter pushed below the sentence stage.
+(The extracted and spans tables run the node without the split.)
+
+Scale notes: the only Python is the one Arrow-batched map node per
+document batch; the context is computed inside each document's span
+array (zero shuffles), and the aggregations are partial-agg hash
+groupBys.  The parse-success gate (residual > 5 -> drop, reference
+:306) is a row filter on the node's own output.  Expression UDFs
+would not do here: Catalyst pushes the filters it infers for an
+explode below the projection that computes them, which clones the
+UDF (the HTML was parsed three times and every span split twice).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .functions.text import (
     rule_hits_col,
@@ -29,7 +38,13 @@ from .functions.text import (
     spans_tagged_col,
     word_count_col,
 )
-from .functions.udfs import extract_doc_udf, sentences_udf
+from .functions.udfs import (
+    SPAN_SENTS_FIELD,
+    SPLIT_KINDS,
+    make_parse_split_fn,
+    parse_split_fields,
+    split_spans_batch,
+)
 
 RESIDUAL_TOLERANCE = 5  # reference: src/parser-tokenizer.py:306
 
@@ -37,24 +52,48 @@ RESIDUAL_TOLERANCE = 5  # reference: src/parser-tokenizer.py:306
 RULE_HIST_BINS = [0, 10, 20, 30, 40, 50, 60, 70, 80, 90, 100,
                   120, 140, 160, 180, 200, 250, 300, 350, 400]
 
-
-def extract_documents(docs: DataFrame, auto_text: bool = True) -> DataFrame:
-    """documents(doc_id, html[, auto_text]) -> + (spans, stripped_text,
-    residual_count, parse_ok).  Empty docs are kept with parse_ok=false
-    (reference skips them at :256-263; downstream filters do the same)."""
-    at = F.col("auto_text") if auto_text and "auto_text" in docs.columns else F.lit(None).cast("string")
-    ex = extract_doc_udf(F.col("html"), at)
-    out = docs.withColumn("_ex", ex).select(
-        "*",
-        F.col("_ex.spans").alias("spans"),
-        F.col("_ex.stripped_text").alias("stripped_text"),
-        F.col("_ex.residual_count").alias("residual_count"),
-    ).drop("_ex")
+def parse_split(docs: DataFrame, auto_text: bool = True,
+                split: bool = True) -> DataFrame:
+    """The fused parse+split stage: documents -> + (spans, stripped_text,
+    residual_count[, sents], parse_ok) in one mapInArrow node
+    (``functions.udfs.make_parse_split_fn``).  ``split`` adds the
+    per-span sentence arrays the sentence table posexplodes."""
+    at = "auto_text" if auto_text and "auto_text" in docs.columns else None
+    out = docs.mapInArrow(
+        make_parse_split_fn(at, split),
+        StructType(docs.schema.fields + parse_split_fields(split)),
+    )
     return out.withColumn(
         "parse_ok",
         (F.length(F.coalesce(F.col("html"), F.lit(""))) > 0)
         & (F.length(F.col("stripped_text")) > 0)
         & (F.col("residual_count") <= RESIDUAL_TOLERANCE),
+    )
+
+
+def extract_documents(docs: DataFrame, auto_text: bool = True) -> DataFrame:
+    """documents(doc_id, html[, auto_text]) -> + (spans, stripped_text,
+    residual_count, parse_ok).  Empty docs are kept with parse_ok=false
+    (reference skips them at :256-263; downstream filters do the same)."""
+    return parse_split(docs, auto_text, split=False)
+
+
+def spans_with_context(extracted: DataFrame, keep=("doc_id",)) -> DataFrame:
+    """One row per span: ``keep`` + the span and its array-local context
+    (functions.text.spans_tagged_col), plus ``sents`` when the input
+    carries it.  explode_outer + a null filter, not explode: an
+    inner explode makes Catalyst infer ``size(_ctx) > 0`` and push it
+    below the projection, which computes the O(n^2) context twice."""
+    carry = [c for c in ("sents",) if c in extracted.columns]
+    return (
+        extracted
+        .withColumn("_tagged", spans_tagged_col("spans", carry))
+        .withColumn("_ctx", spans_context_col(carry))
+        .select(*keep, F.explode_outer("_ctx").alias("s"))
+        .filter(F.col("s").isNotNull())
+        .select(*keep, *[F.col(f"s.{c}").alias(c) for c in [
+            "kind", "text", "media_ref", "offset", "tag_index", "tag",
+            "prec_by", "proc_by", *carry]])
     )
 
 
@@ -80,23 +119,7 @@ def spans_table(extracted: DataFrame,
     base = extracted
     if huge_span_threshold is not None:
         base = extracted.filter(F.size("spans") <= F.lit(huge_span_threshold))
-    small = (
-        base
-        .withColumn("_tagged", spans_tagged_col("spans"))
-        .withColumn("_ctx", spans_context_col())
-        .select("doc_id", F.explode("_ctx").alias("s"))
-        .select(
-            "doc_id",
-            F.col("s.kind").alias("kind"),
-            F.col("s.text").alias("text"),
-            F.col("s.media_ref").alias("media_ref"),
-            F.col("s.offset").alias("offset"),
-            F.col("s.tag_index").alias("tag_index"),
-            F.col("s.tag").alias("tag"),
-            F.col("s.prec_by").alias("prec_by"),
-            F.col("s.proc_by").alias("proc_by"),
-        )
-    )
+    small = spans_with_context(base)
     if huge_span_threshold is None:
         return small
     huge = spans_table_windowed(
@@ -135,18 +158,20 @@ def spans_table_windowed(extracted: DataFrame) -> DataFrame:
     )
 
 
-def sentences_table(spans: DataFrame, parse_ok_docs: DataFrame | None = None) -> DataFrame:
-    """p/h spans -> sentence rows (FIXTURES.md §7 schema).
-
-    ``parse_ok_docs``: optional (doc_id) frame of docs passing the
-    parse-success gate; when given, failed docs are excluded from
-    tokenization (reference: parser-tokenizer.py:304-317)."""
-    df = spans.filter(F.col("kind").isin("p", "h"))
-    if parse_ok_docs is not None:
-        df = df.join(parse_ok_docs.select("doc_id"), "doc_id", "left_semi")
-    df = df.withColumn("sents", sentences_udf(F.col("text")))
+def sentences_table(spans: DataFrame, keep=("doc_id",)) -> DataFrame:
+    """p/h spans -> sentence rows (FIXTURES.md §7 schema), keeping the
+    ``keep`` columns.  Spans from the fused stage carry their sentences
+    (``sents``); any other spans table is split by a map node
+    (``split_spans_batch``) — never an expression UDF, which the filter
+    Catalyst infers for the posexplode would clone."""
+    df = spans.filter(F.col("kind").isin(*SPLIT_KINDS))
+    if "sents" not in df.columns:
+        df = df.select(*keep, "offset", "tag", "prec_by", "proc_by", "text")
+        df = df.mapInArrow(
+            split_spans_batch, StructType(df.schema.fields + [SPAN_SENTS_FIELD])
+        )
     df = df.select(
-        "doc_id",
+        *keep,
         F.col("offset").alias("seq_index"),
         "tag",
         "prec_by",
@@ -154,7 +179,7 @@ def sentences_table(spans: DataFrame, parse_ok_docs: DataFrame | None = None) ->
         F.posexplode("sents").alias("sent_idx", "sentence"),
     )
     return df.select(
-        "doc_id",
+        *keep,
         "seq_index",
         "tag",
         "prec_by",
@@ -219,15 +244,15 @@ def save_reference_outputs(tables: dict[str, DataFrame], out_dir: str) -> None:
 
 
 def parse_tokenize(docs: DataFrame) -> dict[str, DataFrame]:
-    """Full §3.2 pipeline; returns the named output tables."""
+    """Full §3.2 pipeline; returns the named output tables.  The
+    sentences come from one fused parse+split node per document batch,
+    gated on its own ``parse_ok`` (reference: parser-tokenizer.py:304-317)."""
     extracted = extract_documents(docs)
-    spans = spans_table(extracted)
-    ok = extracted.filter("parse_ok").select("doc_id")
-    sentences = sentences_table(spans, ok)
+    sentences = sentences_table(spans_with_context(parse_split(docs).filter("parse_ok")))
     rc = rule_counts_table(sentences)
     return {
         "extracted": extracted,
-        "spans": spans,
+        "spans": spans_table(extracted),
         "sentences": sentences,
         "rule_counts": rc,
         "corpus_hist": corpus_rule_histogram(rc),

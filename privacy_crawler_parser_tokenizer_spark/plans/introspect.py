@@ -122,3 +122,24 @@ def codegen_stage_count(plan: str) -> int:
     ids = set(re.findall(r"codegen id : (\d+)", plan))
     ids |= set(re.findall(r"WholeStageCodegen \((\d+)\)", plan))
     return len(ids)
+
+
+def plan_nodes(plan: str) -> list[tuple[str, str]]:
+    """``(name, detail)`` of every node in a formatted plan's detail
+    section (``(N) Name`` header, then its Input/Arguments/... lines)."""
+    import re
+
+    out = []
+    for block in re.split(r"\n(?=\(\d+\) )", plan)[1:]:
+        header, _, detail = block.partition("\n")
+        out.append((re.match(r"\(\d+\) (\S+)", header).group(1), detail))
+    return out
+
+
+def python_nodes(plan: str) -> list[str]:
+    """Detail text of every node that runs Python workers (expression
+    UDFs, map/grouped-map pandas and Arrow functions)."""
+    import re
+
+    return [d for n, d in plan_nodes(plan)
+            if re.search(r"Python|InPandas|InArrow", n)]

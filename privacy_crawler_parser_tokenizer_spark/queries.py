@@ -1126,11 +1126,13 @@ def q_dup_ngram_fraction(spark, sf_dir):
 def q_sessionize(spark, sf_dir):
     """30-minute-gap sessionization (stateful stream operator expressed
     as a cumulative window; the Structured Streaming twin lives in
-    streaming/)."""
+    streaming/).  Gaps are in microseconds, as the oracle's ``epoch``
+    is: whole-second ``unix_timestamp`` floors would merge a gap in
+    (1800, 1801) s into one session."""
     e = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    news = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
+    gap_us = F.timestamp_diff("MICROSECOND", F.lag("ts").over(w), F.col("ts"))
+    news = F.when(gap_us.isNull() | (gap_us > 1800 * 10**6), 1).otherwise(0)
     return (
         e.withColumn("_new", news)
         .withColumn("session_id", F.sum("_new").over(w).cast("long"))

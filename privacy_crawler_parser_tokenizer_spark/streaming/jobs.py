@@ -2,12 +2,13 @@
 "Streaming-only": the reference is pure batch; these are the engine's
 [NEW] incremental surfaces for continuously-arriving crawl output).
 
-The batch pipeline's lag/lead windows are not available on streaming
-DataFrames, so the streaming sentence path computes neighbor context
-*array-locally* inside each document's span array with higher-order
-functions — bit-identical to the batch windows (verified in tests) and
-fully incremental: the whole dataflow is map-only until the optional
-windowed aggregation, so Spark runs it with no state at all.
+Window functions are not available on streaming DataFrames, so the
+sentence path reuses the batch pipeline's fused parse+split node and
+its *array-local* neighbor context (higher-order functions inside each
+document's span array) — the same code as batch, bit-identical to the
+lag/lead window twin (verified in tests) and fully incremental: the
+whole dataflow is map-only until the optional windowed aggregation, so
+Spark runs it with no state at all.
 
 Jobs:
   * ``sentences_stream``     file-source documents -> sentence rows
@@ -32,8 +33,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..functions.text import rule_hits_col, word_count_col
-from ..functions.udfs import extract_doc_udf, sentences_udf
+from .. import pipeline
 
 DOCS_STREAM_SCHEMA = "doc_id string, html string, ts timestamp"
 
@@ -48,63 +48,25 @@ def read_documents_stream(spark: SparkSession, src_dir: str,
 
 
 def spans_with_context(docs: DataFrame) -> DataFrame:
-    """Streaming-safe spans table: per-kind tag_index and prec_by/
-    proc_by computed inside each document's span array (no window
-    functions).  Replicates the batch quirks exactly: tag label
-    kind||tag_index, Python ``-1`` wraparound for the first span's
-    predecessor, 'None' past the end (reference:
-    src/parser-tokenizer.py:84-100,210-217)."""
-    from ..functions.text import spans_context_col, spans_tagged_col
-
-    ex = docs.withColumn(
-        "_ex", extract_doc_udf(F.col("html"), F.lit(None).cast("string"))
-    ).select("*", F.col("_ex.spans").alias("spans")).drop("_ex")
-
-    with_ctx = ex.withColumn("_tagged", spans_tagged_col("spans")).withColumn(
-        "_ctx", spans_context_col()
-    )
-    return with_ctx.select(
-        "doc_id",
-        *([c for c in docs.columns if c not in ("doc_id", "html")]),
-        F.explode("_ctx").alias("s"),
-    ).select(
-        "*",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-        F.col("s.tag").alias("tag"),
-        F.col("s.prec_by").alias("prec_by"),
-        F.col("s.proc_by").alias("proc_by"),
-    ).drop("s")
+    """Streaming-safe spans table: per-kind tag and prec_by/proc_by
+    computed inside each document's span array (no window functions),
+    through the batch pipeline's fused parse stage and context, so the
+    two cannot fork (reference: src/parser-tokenizer.py:84-100,210-217)."""
+    keep = ["doc_id"] + [c for c in docs.columns if c not in ("doc_id", "html")]
+    return pipeline.spans_with_context(
+        pipeline.extract_documents(docs, auto_text=False), keep=keep
+    ).drop("tag_index")
 
 
 def sentences_stream(docs: DataFrame) -> DataFrame:
-    """Incremental sentence rows with quality rules — same schema as the
-    batch sentences table (minus the doc-level parse gate, which needs
-    no state either: it is computed per-doc in the extraction UDF)."""
-    spans = spans_with_context(docs).filter(F.col("kind").isin("p", "h"))
-    sent = spans.withColumn("sents", sentences_udf(F.col("text"))).select(
-        "doc_id",
-        *([c for c in spans.columns if c in ("ts",)]),
-        F.col("offset").alias("seq_index"),
-        "tag",
-        "prec_by",
-        "proc_by",
-        F.posexplode("sents").alias("sent_idx", "sentence"),
+    """Incremental sentence rows with quality rules — the batch
+    sentences table's fused parse+split path and schema (plus ``ts``),
+    minus the doc-level parse gate."""
+    keep = ["doc_id"] + [c for c in ("ts",) if c in docs.columns]
+    spans = pipeline.spans_with_context(
+        pipeline.parse_split(docs, auto_text=False), keep=keep
     )
-    return sent.select(
-        "doc_id",
-        *([c for c in sent.columns if c in ("ts",)]),
-        "seq_index",
-        "tag",
-        "prec_by",
-        "proc_by",
-        "sent_idx",
-        F.col("sentence").alias("text"),
-        word_count_col(F.col("sentence")).alias("n_words"),
-        rule_hits_col(F.col("sentence")).alias("rule_hits"),
-    )
+    return pipeline.sentences_table(spans, keep=keep)
 
 
 def windowed_rule_counts(sentences: DataFrame, window: str = "1 minute",
@@ -130,7 +92,7 @@ SESSION_OUT_SCHEMA = StructType(
     ]
 )
 SESSION_STATE_SCHEMA = StructType(
-    [StructField("last_epoch", LongType()), StructField("session_id", LongType())]
+    [StructField("last_us", LongType()), StructField("session_id", LongType())]
 )
 SESSION_GAP_S = 1800
 
@@ -138,7 +100,7 @@ SESSION_GAP_S = 1800
 def _assign_sessions(key, pdf_iter: Iterator[pd.DataFrame],
                      state: GroupState) -> Iterator[pd.DataFrame]:
     (user_id,) = key
-    last_epoch, session_id = state.get if state.exists else (None, 0)
+    last_us, session_id = state.get if state.exists else (None, 0)
     # One group's rows can arrive split across several Arrow chunks with
     # no inter-chunk time order; sorting each chunk independently would
     # assign session ids out of event-time order for groups larger than
@@ -146,12 +108,14 @@ def _assign_sessions(key, pdf_iter: Iterator[pd.DataFrame],
     chunks = list(pdf_iter)
     if chunks:
         pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
-        epochs = (pdf["ts"].astype("int64") // 10**9).tolist()
+        # microseconds, like the batch twin: whole seconds would merge a
+        # gap in (1800, 1801) s into one session
+        micros = pdf["ts"].values.astype("datetime64[us]").astype("int64").tolist()
         sessions = []
-        for e in epochs:
-            if last_epoch is None or e - last_epoch > SESSION_GAP_S:
+        for us in micros:
+            if last_us is None or us - last_us > SESSION_GAP_S * 10**6:
                 session_id += 1
-            last_epoch = e
+            last_us = us
             sessions.append(session_id)
         yield pd.DataFrame(
             {
@@ -161,7 +125,7 @@ def _assign_sessions(key, pdf_iter: Iterator[pd.DataFrame],
                 "session_id": sessions,
             }
         )
-    state.update((last_epoch, session_id))
+    state.update((last_us, session_id))
 
 
 def sessionize_stateful(events: DataFrame) -> DataFrame:

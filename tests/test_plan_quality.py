@@ -10,7 +10,9 @@ from privacy_crawler_parser_tokenizer_spark.plans.introspect import (
     has_broadcast_join,
     has_partial_aggregation,
     n_exchanges,
+    plan_nodes,
     pushed_filters,
+    python_nodes,
     read_schemas,
 )
 from privacy_crawler_parser_tokenizer_spark.queries import QUERIES
@@ -64,14 +66,48 @@ def test_shuffle_budgets(spark):
     assert n_exchanges(plan(spark, "token_counts")) == 0
     # one groupBy = one shuffle (plus AQE read)
     assert n_exchanges(plan(spark, "lang_freq")) <= 2
-    # the whole extract->context->tokenize->rules pipeline is shuffle-
-    # free up to the parse-gate semi-join (array-local context)
-    assert n_exchanges(plan(spark, "sentence_pipeline")) <= 1
+    # the whole extract->context->tokenize->rules pipeline moves no data
+    # between tasks: no shuffle, no broadcast (array-local context,
+    # parse gate filtered on the parse node's own rows)
+    p = plan(spark, "sentence_pipeline")
+    assert n_exchanges(p) == 0 and "BroadcastExchange" not in p, p
 
 
-def test_sentence_pipeline_broadcast_gate(spark):
-    # the parse-ok doc-gate must be a broadcast semi-join, not a shuffle
-    assert has_broadcast_join(plan(spark, "sentence_pipeline"))
+def test_sentence_pipeline_single_python_crossing(spark):
+    """Each document crosses into Python once: one map node reads the
+    HTML and returns spans + sentences.  No join (the parse-ok gate is a
+    row filter), and no Python node reads span text (a sentence UDF over
+    exploded spans is the cloned-UDF shape: Catalyst pushes the filter it
+    infers for the explode below the UDF's projection)."""
+    import re
+
+    p = plan(spark, "sentence_pipeline")
+    assert "Join" not in p, p
+    nodes = python_nodes(p)
+    assert len(nodes) == 1, p
+    (inputs,) = [ln for ln in nodes[0].splitlines() if ln.startswith("Input")]
+    assert "html#" in inputs and not re.search(r"\b(text|s)#", inputs), inputs
+
+
+@pytest.mark.parametrize("which", ["sentence_pipeline", "spans_table"])
+def test_span_context_computed_once(spark, which):
+    """The O(n^2) array-local span context (size(filter(slice(...))))
+    is evaluated in exactly one plan node — never cloned into a filter
+    Catalyst infers for the explode."""
+    from privacy_crawler_parser_tokenizer_spark.pipeline import (
+        extract_documents,
+        spans_table,
+    )
+
+    if which == "spans_table":
+        docs = spark.createDataFrame(
+            [("d1", "<p>a.</p><h1>b</h1>")], "doc_id string, html string"
+        )
+        p = formatted_plan(spans_table(extract_documents(docs)))
+    else:
+        p = plan(spark, which)
+    hits = [n for n, d in plan_nodes(p) if "filter(slice(" in d]
+    assert len(hits) == 1, (hits, p)
 
 
 def test_spans_windowed_twin_is_identical(spark):
